@@ -2,26 +2,35 @@
 
 ``plans.load.plan_load`` takes a driver-resident item list — fine for the
 reference's scenarios (≤10⁴ items, _stac_load.py:351-352) but not for a
-catalog of 10⁸ items. Here every planning aggregation from SURVEY §2.4
-runs as a DataFrame job over the ``parse_items`` output (itself a
-DataFrame transform over a STAC-geoparquet-style catalog), and only the
-tiny election results are collected (SURVEY §7.3 "100 TB scale deltas"):
+catalog of 10⁸ items. Here the planning aggregations from SURVEY §2.4 run
+over the ``parse_items`` output (itself a DataFrame transform over a
+STAC-geoparquet-style catalog) as ONE grouping-sets aggregation, collected
+once; only its tiny result reaches the driver (SURVEY §7.3 "100 TB scale
+deltas"). Each grouping set is one election input, told apart by
+``grouping_id()``:
 
-- A7 resolution/CRS election  → groupBy + count, top-1 collected
-- A8 bbox union               → min/max aggregate, 1 row collected
-- A1/A3/A5 temporal grouping  → distinct group keys + first-member ts,
-                                #groups rows collected (bounded by time
-                                range, not item count)
-- band meta (S3)              → first() per band, #bands rows collected
+- ``[asset_name]``  band meta (S3): first non-null dtype/nodata/unit,
+                    #bands rows
+- ``[g_crs, gsd]``  A7 resolution/CRS vote counts and the A8 affine bbox
+                    per grid family, #(crs, gsd) rows
+- ``[k]``           A1/A3/A5 group keys with their first member,
+                    #groups rows (bounded by time range, not item count)
+
+The driver elects from those rows (vote: count desc, gsd asc, crs asc;
+keys: Spark's ascending order, NULL first). Only a catalog with grids
+outside the output CRS runs a second action: the bbox union over
+reprojected footprints (``_with_footprints``).
 
 The item stream itself never leaves the cluster:
 ``sources_from_parsed`` maps parsed rows straight onto the
 ``load_from_sources`` input columns (a broadcast join against the
-#groups-sized key→t map), so catalog → plan → tiles is DataFrame-only.
+#groups-sized key→t map, a JVM literal relation), so catalog → plan →
+tiles is DataFrame-only.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Dict, Optional, Sequence, Tuple
 
 import pandas as pd
@@ -30,6 +39,40 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..model import GeoBox, GeoboxTiles, RasterBandMetadata, RasterLoadParams
 from .load import DEFAULT_CHUNK, LoadPlan, load_from_sources, resolve_load_cfg
+
+
+# plan_load_df's grouping sets over the grouping columns _SET_COLS;
+# grouping_id() sets bit (n-1-i) when column i is aggregated away
+_SETS = (("asset_name",), ("g_crs", "gsd"), ("k",))
+_SET_COLS = ("asset_name", "g_crs", "gsd", "k")
+_GIDS = tuple(
+    sum(1 << (len(_SET_COLS) - 1 - i) for i, c in enumerate(_SET_COLS) if c not in s)
+    for s in _SETS
+)
+
+
+# key type → (JSON element type of its internal value, conversion back);
+# other types parse straight from their JSON form
+_KEY_FROM_INTERNAL = {
+    "timestamp": ("bigint", F.timestamp_micros),
+    "date": ("int", F.date_from_unix_date),
+}
+
+
+def _spark_asc(v):
+    """Sort key of Spark's ascending order: NULL first, NaN last; strings
+    compare by code point, which is UTF-8 binary order."""
+    return (v is not None, v != v, v)
+
+
+def _spark_min(vals):
+    """Spark ``min``: NULLs ignored, NaN above every number."""
+    return min((v for v in vals if v is not None), key=_spark_asc, default=None)
+
+
+def _spark_max(vals):
+    """Spark ``max``: NULLs ignored, NaN above every number."""
+    return max((v for v in vals if v is not None), key=_spark_asc, default=None)
 
 
 def _with_geom_cols(parsed: DataFrame) -> DataFrame:
@@ -177,30 +220,54 @@ def plan_load_df(
     base = _with_geom_cols(parsed)
     if bands is not None:
         base = base.where(F.col("asset_name").isin(list(bands)))
-
+    key = _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
     # solar_day derives longitude from the grid centroid — only valid for
     # geographic coordinates. A projected catalog would silently produce
-    # garbage day offsets (meters/15 "hours"), so validate loudly.
+    # garbage day offsets (meters/15 "hours"), so it is refused below;
+    # its rows get no key, so the refusal is never masked by the key math.
+    off_grid = F.col("g_crs") != "EPSG:4326"
     if groupby == "solar_day":
-        bad = base.where(F.col("g_crs") != "EPSG:4326").limit(1).count()
-        if bad:
-            raise ValueError(
-                "groupby='solar_day' on the catalog path requires EPSG:4326 "
-                "source grids (longitude comes from the grid centroid); "
-                "reproject the footprints or use the list path with "
-                "explicit Item.lon"
-            )
+        key = F.when(off_grid, None).otherwise(key)
+    # the representative ts per group follows the precedence basis —
+    # (ts, id) or input index
+    if preserve_original_order:
+        _require_item_idx(base)
+        member = F.struct("item_idx", "ts")
+    else:
+        member = F.struct("ts", "id")
 
-    # band list + per-band metadata: #bands rows
-    meta_rows = (
-        base.groupBy("asset_name")
+    # every election in ONE aggregation, collected once:
+    # #bands + #(crs, gsd) + #groups rows
+    rows = (
+        base.withColumns({"k": key, "m": member})
+        .groupingSets(_SETS, *_SET_COLS)
         .agg(
+            F.grouping_id().alias("gid"),
+            # band meta (S3)
             F.first("data_type", ignorenulls=True).alias("data_type"),
             F.first("nodata", ignorenulls=True).alias("nodata"),
             F.first("unit", ignorenulls=True).alias("unit"),
+            # A7 vote count and the A8 same-CRS bbox per (crs, gsd)
+            F.count(F.lit(1)).alias("n"),
+            F.min("bb_xmin").alias("x0"),
+            F.min("bb_ymin").alias("y0"),
+            F.max("bb_xmax").alias("x1"),
+            F.max("bb_ymax").alias("y1"),
+            # A1/A3/A5 first member per group
+            F.min("m").alias("first_m"),
+            F.bool_or(off_grid).alias("off_grid"),
         )
         .collect()
     )
+    meta_rows, votes, groups = ([r for r in rows if r.gid == g] for g in _GIDS)
+
+    if groupby == "solar_day" and any(r.off_grid for r in meta_rows):
+        raise ValueError(
+            "groupby='solar_day' on the catalog path requires EPSG:4326 "
+            "source grids (longitude comes from the grid centroid); "
+            "reproject the footprints or use the list path with "
+            "explicit Item.lon"
+        )
     if not meta_rows:
         raise ValueError("no raster sources in catalog (after band filter)")
     meta = {
@@ -216,16 +283,12 @@ def plan_load_df(
         if crs is None or resolution is None:
             # A7 JOINT (crs, gsd) majority vote (reference _most_common_gbox
             # _mdtools.py:726-749; advisor finding: voting gsd over all
-            # CRSes can elect a meters resolution for a degrees grid)
-            vote = base
-            if crs is not None:
-                vote = vote.where(F.col("g_crs") == crs)
-            r = (
-                vote.groupBy("g_crs", "gsd")
-                .count()
-                .orderBy(F.desc("count"), F.asc("gsd"), F.asc("g_crs"))
-                .first()
-            )
+            # CRSes can elect a meters resolution for a degrees grid):
+            # count desc, then gsd asc, then crs asc
+            cands = [r for r in votes if crs is None or r.g_crs == crs]
+            if not cands:
+                raise ValueError(f"no source grids in crs={crs!r}")
+            r = min(cands, key=lambda r: (-r.n, _spark_asc(r.gsd), _spark_asc(r.g_crs)))
             if crs is None:
                 crs = r.g_crs
             if resolution is None:
@@ -238,32 +301,28 @@ def plan_load_df(
             poly_bb, poly_crs = _geopolygon_bbox(geopolygon)
             bbox = _bbox_to_crs(poly_bb, poly_crs, crs)
         if bbox is None:
-            # A8 bbox union, 1 row — foreign-CRS grids contribute their
-            # reprojected footprints (list-path parity)
-            bb = _with_footprints(base, crs).agg(
-                F.min("fp_xmin").alias("x0"),
-                F.min("fp_ymin").alias("y0"),
-                F.max("fp_xmax").alias("x1"),
-                F.max("fp_ymax").alias("y1"),
-            ).first()
-            bbox = (bb.x0, bb.y0, bb.x1, bb.y1)
+            # A8 bbox union: the per-(crs, gsd) affine bboxes when every
+            # grid is in the output CRS; a foreign (or NULL) CRS needs the
+            # reprojected footprints (list-path parity), one more action
+            if crs is not None and all(r.g_crs == crs for r in votes):
+                bbox = (
+                    _spark_min(r.x0 for r in votes),
+                    _spark_min(r.y0 for r in votes),
+                    _spark_max(r.x1 for r in votes),
+                    _spark_max(r.y1 for r in votes),
+                )
+            else:
+                bb = _with_footprints(base, crs).agg(
+                    F.min("fp_xmin").alias("x0"),
+                    F.min("fp_ymin").alias("y0"),
+                    F.max("fp_xmax").alias("x1"),
+                    F.max("fp_ymax").alias("y1"),
+                ).first()
+                bbox = (bb.x0, bb.y0, bb.x1, bb.y1)
         geobox = GeoBox.from_bbox(bbox, resolution, crs)
 
-    # temporal grouping: #groups rows (A1/A3/A5); the representative ts
-    # per group follows the precedence basis — (ts, id) or input index
-    key = _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
-    if preserve_original_order:
-        _require_item_idx(base)
-        member = F.struct("item_idx", "ts")
-    else:
-        member = F.struct("ts", "id")
-    groups = (
-        base.select(key.alias("k"), member.alias("m"))
-        .groupBy("k")
-        .agg(F.min("m").alias("first_m"))
-        .orderBy("k")
-        .collect()
-    )
+    # temporal grouping (A1/A3/A5) in Spark's orderBy("k") order
+    groups.sort(key=lambda r: _spark_asc(r.k))
     group_keys = [r.k for r in groups]
     group_ts = [r.first_m.ts for r in groups]
 
@@ -297,23 +356,32 @@ def sources_from_parsed(
     spark: SparkSession, parsed: DataFrame, plan: LoadPlan, groupby: str = "time"
 ) -> DataFrame:
     """parsed rows → load_from_sources input columns; the only non-map
-    operation is a broadcast join against the #groups-sized key→t map."""
+    operations are the footprint join and a broadcast join against the
+    #groups-sized key→t map."""
     base = _with_geom_cols(parsed).where(F.col("asset_name").isin(plan.bands))
     # tile binning (J1) needs the footprint bbox in the OUTPUT CRS:
     # same-CRS rows use the affine bbox; foreign-CRS rows get the
     # densified-boundary reproject (per distinct grid, broadcast back —
     # list-path parity, reference safe_geometry model.py:271-299)
     base = _with_footprints(base, plan.gbox.crs)
-    rows = [(k, t) for t, k in enumerate(plan.group_keys)]
-    if all(k is None for k in plan.group_keys):
-        # schema inference can't type an all-NULL key column
-        key_map = spark.createDataFrame(rows, "_plan_k string, t bigint")
-    else:
-        key_map = spark.createDataFrame(rows, ["_plan_k", "t"])
-    t = F.col("g_transform")
     keyed = base.withColumn(
         "k", _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
     )
+    # key→t as a JVM literal relation typed from the key column: one JSON
+    # literal of the keys' internal values, so it costs O(1) py4j calls at
+    # any #groups (a lit() per key costs ~0.4 ms), needs no Python-RDD
+    # scan, and an all-NULL key column needs no special case
+    kt = keyed.schema["k"].dataType
+    elem, to_kt = _KEY_FROM_INTERNAL.get(kt.typeName(), (kt.simpleString(), None))
+    keys = F.from_json(
+        F.lit(json.dumps([kt.toInternal(k) for k in plan.group_keys])), f"array<{elem}>"
+    )
+    if to_kt is not None:
+        keys = F.transform(keys, to_kt)
+    key_map = spark.range(0, 1, 1, 1).select(
+        F.posexplode(keys).alias("t", "_plan_k")
+    ).withColumn("t", F.col("t").cast("bigint"))
+    t = F.col("g_transform")
     return (
         # eqNullSafe: a property-groupby's missing-property group has a
         # NULL key, which a plain equi-join would silently drop

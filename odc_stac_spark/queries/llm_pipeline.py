@@ -109,9 +109,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = new_labels.select("doc_id", "component")
         if changed == 0:
             break
-    # labels is an EAGER localCheckpoint (already materialized), so the
-    # edge cache is no longer needed by the returned plan — release it
-    # here instead of leaking it into the shared session (ADVICE r11).
+    # labels is a localCheckpoint that the last round's convergence
+    # collect() already materialized, so the edge cache is no longer
+    # needed by the returned plan — release it here instead of leaking it
+    # into the shared session (ADVICE r11).
     edges.unpersist()
     return labels.select("doc_id", "component")
 

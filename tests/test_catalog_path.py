@@ -353,3 +353,154 @@ def test_groupby_callable_catalog_equals_list_path(spark, tmp_path):
     assert set(got) == set(want)
     for b in got:
         np.testing.assert_array_equal(got[b], want[b])
+
+
+def _planning_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (result, #jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _cross_crs_parsed(spark, tmp_path):
+    """Two UTM grids and one WGS84 grid over the same area (the catalog of
+    test_cross_crs_catalog_equals_list_path)."""
+    docs = []
+    for i, o in enumerate([(400000.0, 8350000.0), (405000.0, 8348000.0)]):
+        d = catalog_item(i, o)
+        d["assets"] = {"red": _utm_asset("red", i, o)}
+        docs.append(d)
+    g = catalog_item(2, (26.1, -14.95))
+    a = synth_asset("red", 2, (26.1, -14.95), shape=(100, 150), res=0.001)
+    a["proj_epsg"] = 4326
+    a["gsd"] = 0.001
+    g["assets"] = {"red": a}
+    docs.append(g)
+    path = str(tmp_path / "xcrs.parquet")
+    items_df(spark, docs).write.parquet(path)
+    return parse_items(spark, spark.read.parquet(path))
+
+
+def test_plan_is_one_aggregation_action(spark, parsed_catalog, tmp_path):
+    """Band meta, the (crs, gsd) vote, the bbox union and the group keys
+    come from one grouping-sets aggregation: one action (≤3 jobs under
+    AQE). A cross-CRS catalog adds only the footprint bbox aggregation."""
+    import pyspark.sql.functions as F
+
+    from odc_stac_spark.plans.catalog import _with_footprints, _with_geom_cols
+
+    parsed, _ = parsed_catalog
+    plan, jobs = _planning_jobs(
+        spark, lambda: plan_load_df(spark, parsed, groupby="time", chunks=(48, 48))
+    )
+    assert plan.gbox.bbox() == (0.0, -200.0, 1600.0, 1200.0)
+    assert 1 <= jobs <= 3
+
+    xparsed = _cross_crs_parsed(spark, tmp_path)
+    xplan, xjobs = _planning_jobs(
+        spark, lambda: plan_load_df(spark, xparsed, groupby="time", chunks=(64, 64))
+    )
+    assert xplan.gbox.crs == f"EPSG:{EPSG}"
+    _, fp_jobs = _planning_jobs(
+        spark,
+        lambda: _with_footprints(_with_geom_cols(xparsed), xplan.gbox.crs)
+        .agg(F.min("fp_xmin"), F.min("fp_ymin"), F.max("fp_xmax"), F.max("fp_ymax"))
+        .first(),
+    )
+    assert jobs < xjobs <= 3 + fp_jobs
+
+
+def test_sources_key_map_is_a_jvm_literal(spark, parsed_catalog):
+    """The key→t map is a literal relation: no Python-RDD scan
+    (``createDataFrame``) that would cost a Python-worker job per action."""
+    parsed, _ = parsed_catalog
+    plan = plan_load_df(spark, parsed, groupby="time", chunks=(64, 64))
+    qe = sources_from_parsed(spark, parsed, plan, groupby="time")._jdf.queryExecution()
+    for text in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "ExistingRDD" not in text and "LogicalRDD" not in text
+        assert "PythonRDD" not in text
+
+
+def test_vote_tie_elects_finer_gsd_then_smaller_crs(spark, tmp_path):
+    """Equal (crs, gsd) counts elect the smaller gsd, then the smaller crs
+    — the list path's _elect_crs_res rule, as Spark's orderBy gave it."""
+    from odc_stac_spark.plans.load import _elect_crs_res
+
+    def plan_for(name, grids):
+        docs = []
+        for i, (epsg, res) in enumerate(grids):
+            d = catalog_item(i, (0.0, 1000.0))
+            a = synth_asset("red", i, (0.0, 1000.0), res=res)
+            a["proj_epsg"] = epsg
+            d["assets"] = {"red": a}
+            docs.append(d)
+        path = str(tmp_path / f"{name}.parquet")
+        items_df(spark, docs).write.parquet(path)
+        parsed = parse_items(spark, spark.read.parquet(path))
+        # a fixed bbox isolates the vote from the footprint union
+        plan = plan_load_df(spark, parsed, bbox=(0.0, 0.0, 400.0, 400.0))
+        want = _elect_crs_res(
+            [GeoBox((100, 120), (r, 0.0, 0.0, 0.0, -r, 1000.0), f"EPSG:{e}") for e, r in grids]
+        )
+        assert (plan.gbox.crs, plan.gbox.resolution[0]) == want
+        return plan
+
+    # one vote each for 20 m and 10 m → the finer gsd
+    plan = plan_for("gsd_tie", [(32735, 20.0), (32735, 10.0)])
+    assert plan.gbox.resolution == (10.0, -10.0)
+    # one vote each, same gsd, two CRSes → the smaller crs string
+    plan = plan_for("crs_tie", [(32735, 10.0), (32734, 10.0)])
+    assert plan.gbox.crs == "EPSG:32734"
+    # both differ: gsd decides before crs
+    plan = plan_for("gsd_first", [(32734, 20.0), (32735, 10.0)])
+    assert (plan.gbox.crs, plan.gbox.resolution) == ("EPSG:32735", (10.0, -10.0))
+
+
+def _property_catalog(spark, tmp_path, platforms):
+    origins = [(0.0, 1000.0), (400.0, 800.0), (200.0, 1200.0)]
+    docs = [catalog_item(i, o) for i, o in enumerate(origins)]
+    items = equivalent_items(3, origins)
+    for d, it, p in zip(docs, items, platforms):
+        d["properties"] = {} if p is None else {"platform": p}
+        it.props = {} if p is None else {"platform": p}
+    path = str(tmp_path / "props.parquet")
+    items_df(spark, docs).write.parquet(path)
+    return parse_items(spark, spark.read.parquet(path)), items
+
+
+def test_groupby_property_all_null_key_plans_and_loads(spark, tmp_path):
+    """Every item lacks the property: one NULL-keyed group, joined through
+    the typed literal key map, pixels equal the list path."""
+    parsed, items = _property_catalog(spark, tmp_path, [None, None, None])
+    tiles_df, plan = load_from_catalog(spark, parsed, groupby="platform", chunks=(64, 64))
+    assert plan.group_keys == [None]
+    got = assemble_numpy(tiles_df, plan)
+    tiles2, plan2 = load(spark, items, groupby="platform", chunks=(64, 64))
+    assert plan2.group_keys == plan.group_keys
+    want = assemble_numpy(tiles2, plan2)
+    for b in want:
+        np.testing.assert_array_equal(got[b], want[b])
+
+
+def test_groupby_non_ascii_keys_order_like_list_path(spark, tmp_path):
+    """String keys sort in UTF-8 binary (code point) order on both paths:
+    U+FF5E before U+1F600, though UTF-16 code units would reverse them."""
+    parsed, items = _property_catalog(spark, tmp_path, ["\U0001f600", "émile", "～"])
+    tiles_df, plan = load_from_catalog(spark, parsed, groupby="platform", chunks=(64, 64))
+    assert plan.group_keys == ["émile", "～", "\U0001f600"]
+    got = assemble_numpy(tiles_df, plan)
+    tiles2, plan2 = load(spark, items, groupby="platform", chunks=(64, 64))
+    assert plan2.group_keys == plan.group_keys
+    want = assemble_numpy(tiles2, plan2)
+    for b in want:
+        np.testing.assert_array_equal(got[b], want[b])
