@@ -43,6 +43,8 @@ from typing import List, Tuple
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..session import literal_relation
+
 
 def _cos(a, b):
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
@@ -82,15 +84,18 @@ def assign_to_centroids(
     unique — full Catalyst analysis + whole-stage codegen compile per
     iteration (driver-side, serial). With the centroids as data the plan
     is structurally identical across iterations, so codegen is compiled
-    once and cached; the per-centroid norm ships precomputed (cnrm, the
-    bit-identical sequential fold) instead of being re-folded per corpus
-    row. Float semantics are unchanged: the cosine is the identical
-    fold arithmetic per (vector, centroid) pair, and the strictly-
-    greater fold keeps the FIRST maximum over the cent_id-ascending
-    array — the same winner as the window's (sim DESC, cent_id ASC)
-    order — so every hash-gated oracle image is preserved bit-for-bit."""
+    once and cached (``literal_relation`` passes the k rows as one
+    referenced literal, not as code); the per-centroid norm ships
+    precomputed (cnrm, the bit-identical sequential fold) instead of
+    being re-folded per corpus row. Float semantics are unchanged: the
+    cosine is the identical fold arithmetic per (vector, centroid) pair,
+    and the strictly-greater fold keeps the FIRST maximum over the
+    cent_id-ascending array — the same winner as the window's (sim DESC,
+    cent_id ASC) order — so every hash-gated oracle image is preserved
+    bit-for-bit."""
     spark = emb.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = literal_relation(
+        spark,
         [
             (i, [float(v) for v in c], _seqnorm(c))
             for i, c in enumerate(centroids)

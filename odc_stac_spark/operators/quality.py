@@ -29,6 +29,8 @@ from typing import Dict, List
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import literal_relation
+
 
 def _violation_expr(spec: Dict):
     c = F.col(spec["column"])
@@ -94,7 +96,8 @@ def run_checks(df: DataFrame, checks: List[Dict]) -> DataFrame:
             )
         )
     if not results:  # no checks supplied → empty report, not an IndexError
-        return df.sparkSession.createDataFrame(
+        return literal_relation(
+            df.sparkSession,
             [],
             "check string, column string, violations bigint, total bigint, passed boolean",
         )

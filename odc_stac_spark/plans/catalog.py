@@ -30,14 +30,15 @@ tiles is DataFrame-only.
 
 from __future__ import annotations
 
-import json
 from typing import Dict, Optional, Sequence, Tuple
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..model import GeoBox, GeoboxTiles, RasterBandMetadata, RasterLoadParams
+from ..session import literal_relation
 from .load import DEFAULT_CHUNK, LoadPlan, load_from_sources, resolve_load_cfg
 
 
@@ -49,14 +50,6 @@ _GIDS = tuple(
     sum(1 << (len(_SET_COLS) - 1 - i) for i, c in enumerate(_SET_COLS) if c not in s)
     for s in _SETS
 )
-
-
-# key type → (JSON element type of its internal value, conversion back);
-# other types parse straight from their JSON form
-_KEY_FROM_INTERNAL = {
-    "timestamp": ("bigint", F.timestamp_micros),
-    "date": ("int", F.date_from_unix_date),
-}
 
 
 def _spark_asc(v):
@@ -367,20 +360,16 @@ def sources_from_parsed(
     keyed = base.withColumn(
         "k", _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
     )
-    # key→t as a JVM literal relation typed from the key column: one JSON
-    # literal of the keys' internal values, so it costs O(1) py4j calls at
-    # any #groups (a lit() per key costs ~0.4 ms), needs no Python-RDD
-    # scan, and an all-NULL key column needs no special case
-    kt = keyed.schema["k"].dataType
-    elem, to_kt = _KEY_FROM_INTERNAL.get(kt.typeName(), (kt.simpleString(), None))
-    keys = F.from_json(
-        F.lit(json.dumps([kt.toInternal(k) for k in plan.group_keys])), f"array<{elem}>"
+    # key→t as a literal relation typed from the key column: O(1) py4j
+    # calls at any #groups (a lit() per key costs ~0.4 ms), and an all-NULL
+    # key column needs no special case
+    key_map = literal_relation(
+        spark,
+        list(enumerate(plan.group_keys)),
+        StructType(
+            [StructField("t", LongType()), StructField("_plan_k", keyed.schema["k"].dataType)]
+        ),
     )
-    if to_kt is not None:
-        keys = F.transform(keys, to_kt)
-    key_map = spark.range(0, 1, 1, 1).select(
-        F.posexplode(keys).alias("t", "_plan_k")
-    ).withColumn("t", F.col("t").cast("bigint"))
     t = F.col("g_transform")
     return (
         # eqNullSafe: a property-groupby's missing-property group has a

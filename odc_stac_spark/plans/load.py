@@ -815,6 +815,8 @@ def load(
             if rows:
                 yield pd.DataFrame(rows)
 
+    # createDataFrame, not literal_relation: its contiguous partition split
+    # is what the interleave above relies on
     tdf = spark.createDataFrame(pd.DataFrame(task_rows))
     return tdf.mapInPandas(run_packed, _TILE_SCHEMA), plan
 

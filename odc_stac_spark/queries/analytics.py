@@ -24,6 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..session import literal_relation
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -667,7 +668,7 @@ def sketch_cms_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the sketch build and the probe read the per-user counts
     keys = scoped_persist(keys)
     params = F.broadcast(
-        spark.createDataFrame(CMS_ROWS, "i INT, a BIGINT, b BIGINT")
+        literal_relation(spark, CMS_ROWS, "i INT, a BIGINT, b BIGINT")
     )
     bucket = ((F.col("hp") * F.col("a") + F.col("b")) % CMS_P) % CMS_W
     cms = (

@@ -594,7 +594,7 @@ def text_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 optimization (VERDICT r15 finding #3): the two driver-side
-    # .count() actions + createDataFrame are folded into ONE distributed
+    # .count() actions + a local DataFrame are folded into ONE distributed
     # aggregation — exact pairs LEFT-JOIN the (unique-by-construction)
     # LSH pair set with a hit flag, and a single 1-row agg yields both
     # counts; the report row never touches the driver. Same numbers:

@@ -18,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..session import literal_relation
 from ..sources.tables import load_table
 from .dedup import JACCARD_THRESHOLD, _hash32, _SHINGLES_SQL, dedup_ngram_jaccard
 from . import register, scoped_persist
@@ -623,7 +624,8 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     merges = bpe_train(docs, n_merges=12)
-    return spark.createDataFrame(
+    return literal_relation(
+        spark,
         [(int(s), a, b, a + b, int(n)) for s, a, b, n in merges],
         "step INT, left STRING, right STRING, merged STRING, pair_count BIGINT",
     )

@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import broadcast
 
+from ..session import literal_relation
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -134,7 +135,8 @@ def q7_nation_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
         # disjunction can never hold. Short-circuit to an explicitly empty
         # result with the output schema rather than relying on Spark
         # accepting zero-arg create_map()/isin([]).
-        return spark.createDataFrame(
+        return literal_relation(
+            spark,
             [],
             "supp_nation string, cust_nation string, l_year int, revenue double",
         )

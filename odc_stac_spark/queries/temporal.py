@@ -15,6 +15,7 @@ from contextlib import contextmanager
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..session import literal_relation
 from ..sources.tables import load_table
 from . import register
 
@@ -2322,7 +2323,7 @@ def events_retention_day_n_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = scoped_persist(firsts)
     activity = scoped_persist(activity)
     cohort = firsts.agg(F.count(F.lit(1)).alias("n_users"))
-    ds = spark.createDataFrame([(n,) for n in RETENTION_DAYS], "day_n int")
+    ds = literal_relation(spark, [(n,) for n in RETENTION_DAYS], "day_n int")
     probes = F.broadcast(ds).crossJoin(firsts)
     retained = (
         probes.join(

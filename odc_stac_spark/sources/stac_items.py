@@ -44,6 +44,7 @@ from ..model import (
     RasterCollectionMetadata,
     RasterSource,
 )
+from ..session import literal_relation
 
 # ---- schema for raw STAC items (S1 scan) ---------------------------------
 
@@ -272,26 +273,12 @@ def stac_dicts_to_items(spark: SparkSession, docs: Iterable[dict]) -> DataFrame:
     """Driver-side convenience: raw STAC item dicts (e.g. from pystac
     ``Item.to_dict()`` or a search dump) → ITEM_SCHEMA rows, through the
     SAME column pipeline as the at-scale JSON path (one code path)."""
-    import json as _json
+    import json
 
-    strs = [_json.dumps(d) for d in docs]
-    # JVM-side literal relation instead of createDataFrame(list): the list
-    # path materializes a PYTHON-RDD-backed scan (pickled rows), so EVERY
-    # action re-pays a Python-worker round trip per partition — and the
-    # old coalesce(1) serialized those round trips into one task
-    # (measured: ~4-6 s per action for a 2-document parse on a loaded
-    # sandbox; explode(array(literals)) folds to a JVM LocalRelation and
-    # the same action runs in ~0.5 s). Driver-side dict lists are small
-    # by construction (the at-scale path is read_stac_json); the guard
-    # keeps a pathological huge list off the literal plan.
-    if strs and len(strs) <= 1024:
-        raw = spark.range(0, 1, 1, 1).select(
-            F.explode(F.array(*[F.lit(s) for s in strs])).alias("value")
-        )
-    else:
-        raw = spark.createDataFrame(
-            [(s,) for s in strs], schema="value string"
-        ).coalesce(1)
+    # a literal relation, not a Python-RDD scan that re-pays a
+    # Python-worker round trip on every action (a 2-document parse
+    # measured ~4-6 s per action that way, ~0.5 s as a literal)
+    raw = literal_relation(spark, [(json.dumps(d),) for d in docs], "value string")
     return stac_json_to_items(raw)
 
 # media types treated as raster data (reference RASTER_FILE_EXTENSIONS /
@@ -310,13 +297,13 @@ def items_df(
     ``with_idx=True`` attaches an ``item_idx`` input-order column — the
     basis for ``preserve_original_order`` on the catalog path (a DataFrame
     has no inherent row order, so the order must be a column)."""
-    docs = list(items)
-    if not with_idx:
-        return spark.createDataFrame(docs, schema=ITEM_SCHEMA)
-    schema = StructType(ITEM_SCHEMA.fields + [StructField("item_idx", IntegerType())])
-    return spark.createDataFrame(
-        [{**d, "item_idx": i} for i, d in enumerate(docs)], schema=schema
-    )
+    docs, schema = list(items), ITEM_SCHEMA
+    if with_idx:
+        docs = [{**d, "item_idx": i} for i, d in enumerate(docs)]
+        schema = StructType(schema.fields + [StructField("item_idx", IntegerType())])
+    # createDataFrame, not literal_relation: these are user rows with nested
+    # structs, checked against the schema on the way in
+    return spark.createDataFrame(docs, schema=schema)
 
 
 def is_raster_data_col(asset: F.Column) -> F.Column:

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import literal_relation
+
 
 def write_webdataset_shard(
     path: str, samples: List[Tuple[str, Dict[str, bytes]]]
@@ -75,10 +77,11 @@ def read_webdataset(
 ) -> DataFrame:
     """Tar shards → (shard, key, ext, data) rows, one partition per shard."""
     if not shard_paths:
-        return spark.createDataFrame([], _ROW_SCHEMA)
-    # exactly one shard per partition (hash-repartition on path could map
-    # two shards to one slot and leave others empty): parallelize with
-    # numSlices == n gives the 1:1 assignment WebDataset readers want
+        return literal_relation(spark, [], _ROW_SCHEMA)
+    # createDataFrame over a parallelized list, not literal_relation: exactly
+    # one shard per partition (hash-repartition on path could map two shards
+    # to one slot and leave others empty); numSlices == n gives the 1:1
+    # assignment WebDataset readers want
     paths = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(p,) for p in shard_paths], len(shard_paths)

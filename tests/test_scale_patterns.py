@@ -203,20 +203,42 @@ def test_deep_relational_plan_shapes(spark, sf_dir):
     assert "LeftAnti" in plan
 
 
+def _python_row_scans(df) -> int:
+    """RDD scans (``Scan ExistingRDD``) whose lineage runs a Python worker:
+    rows from ``createDataFrame``. A localCheckpoint prints as the same
+    scan, but its RDD is JVM-side, so the lineage tells them apart."""
+    n, todo = 0, [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "RDDScanExec":
+            n += "PythonRDD" in node.rdd().toDebugString()
+        elif cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls == "InMemoryTableScanExec":
+            todo.append(node.relation().cachedPlan())
+        for seq in (node.children(), node.subqueries()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return n
+
+
 def test_no_python_udfs_in_relational_queries(spark, sf_dir):
     """EVERY registered query stays JVM-side except the paths that are
     Python by design (raster tile tasks, multimodal decode, streaming
     sinks, iterative dedup clustering — all Arrow-batched, never
-    row-at-a-time)."""
+    row-at-a-time). Driver-side rows enter through literal_relation, never
+    a Python-RDD scan that re-runs Python on every action."""
     python_by_design = {"raster", "multimodal", "streaming"}
     skip = {"dedup_connected_components"}  # iterative applyInPandas-free but multi-job
     checked = 0
     for name, q in REGISTRY.items():
         if name in skip or python_by_design & set(q.tags):
             continue
-        plan = _executed_plan(q.spark_fn(spark, sf_dir))
+        df = q.spark_fn(spark, sf_dir)
+        plan = _executed_plan(df)
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
+        assert not _python_row_scans(df), name
         checked += 1
     assert checked >= 60  # the whole relational/text/dedup/similarity surface
 
